@@ -1,8 +1,8 @@
 """Graph operators for dedup clustering (north-star pipeline need: collapse
 near-duplicate *pairs* into duplicate *groups* and elect a canonical doc).
 
-Two component algorithms, same unique fixpoint (component = min reachable
-id):
+All component operators reach the same unique fixpoint (component = min
+reachable id):
 
 - :func:`connected_components_star` — alternating large-star/small-star
   rounds (Kiveris et al. SoCC'14), O(log n) rounds independent of graph
@@ -12,16 +12,22 @@ id):
   simple fallback for known-shallow graphs (near-dup clusters, diameter
   typically < 10, where each round is one join+agg instead of star's
   two).
+- :func:`incremental_components` — merges a delta batch's edges into an
+  existing labeling. It runs no rounds: the delta edges, contracted to
+  base labels, are resolved on the driver (at most
+  :data:`DELTA_ROWS_CAP` rows) and handed back as Arrow literals.
 
-Both run a bounded driver-side convergence loop; each iteration is fully
-distributed and lineage is truncated per round (localCheckpoint /
-checkpoint hook) so Catalyst analysis cost stays flat.
+The two from-scratch algorithms run a bounded driver-side convergence
+loop; each iteration is fully distributed and lineage is truncated per
+round (localCheckpoint / checkpoint hook) so Catalyst analysis cost stays
+flat.
 """
 
 from __future__ import annotations
 
 import warnings
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -122,42 +128,110 @@ def connected_components(
     return labels
 
 
+#: Most rows a delta-sized relation may bring to the driver: the pair
+#: kernel's emit bound (operators/dedup.py). Under the ``delta_min_id``
+#: contract a batch's pairs stay far below it; past it
+#: :func:`collect_delta` fails loudly instead of exhausting driver memory
+#: deep inside the collect.
+DELTA_ROWS_CAP = 1 << 22
+
+
+def collect_delta(df: DataFrame, what: str) -> pa.Table:
+    """Collect a delta-sized relation to the driver as one Arrow table,
+    reading at most ``DELTA_ROWS_CAP + 1`` rows; more raises
+    ``ValueError`` naming the cap and the ``delta_min_id`` contract."""
+    t = df.limit(DELTA_ROWS_CAP + 1).toArrow()
+    if t.num_rows > DELTA_ROWS_CAP:
+        raise ValueError(
+            f"{what}: more than {DELTA_ROWS_CAP} rows would reach the "
+            "driver; the delta_min_id contract bounds this relation by the "
+            "delta batch — ingest the delta in smaller batches"
+        )
+    return t
+
+
 def incremental_components(
     base_labels: DataFrame,
     delta_edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Merge a delta batch's edges into an EXISTING component labeling —
     the incremental-ingest form of :func:`connected_components`
     (``delta_min_id`` family contract applied to the iterative tier).
 
-    Star-edge contraction: every base component is already connected, so
-    its members can be represented by star edges (member → label) without
-    changing reachability; the min-label fixpoint over
-    (star edges ∪ delta edges) therefore equals the fixpoint over
-    (base edges ∪ delta edges). Node coverage is preserved too: every
-    labeled base node appears in a star edge (components of size 1 never
-    arise from an edge set), and delta nodes appear in the delta edges.
-    Equality with the from-scratch run is pinned in
-    tests/test_operators.py.
+    Label contraction, resolved on the driver: every base component is
+    already connected and labeled with its min id, so for reachability
+    it is one vertex, its label. Each delta edge's endpoints are mapped
+    to their base label (a node absent from ``base_labels`` stands for
+    itself) in one left-join collect, and a min-root union-find over
+    those label pairs yields each touched label's new root. The result
+    is ``base_labels`` relabeled through that remap, plus a row per new
+    delta node — the same min-label fixpoint, node coverage (base nodes
+    ∪ delta endpoints) and id dtype as running CC over base ∪ delta
+    edges (pinned in tests/test_operators.py and
+    tests/test_property_roundtrip.py).
 
-    Cost shape: the star relation is one row per PREVIOUSLY LABELED node
-    (≤ one per base edge endpoint) and the propagation starts from an
-    already-flat forest — merges chase only the delta's new connections,
-    so rounds track the delta's merge depth, not the base graph's
-    diameter, and the base EDGE computation (the expensive near-dup
-    join) never re-runs.
+    Cost shape: one collect of the contracted delta edges (at most
+    :data:`DELTA_ROWS_CAP` rows; its joins are the only Spark work at
+    build time), then a single pass over ``base_labels`` with a
+    broadcast remap inside the returned plan. The remap and the new rows
+    are Arrow literals (``createDataFrame(pyarrow.Table)`` is a JVM-side
+    ``LocalRelation``, even when empty), so no round loop, checkpoint or
+    Python worker runs, and the base edge computation (the expensive
+    near-dup join) never re-runs.
     """
-    star = base_labels.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(src), F.col("component").alias(dst)
+    spark = base_labels.sparkSession
+    lab = base_labels.select("node", "component")
+    edges = collect_delta(
+        delta_edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .join(lab.toDF("a", "la"), "a", "left")
+        .join(lab.toDF("b", "lb"), "b", "left")
+        .select(
+            F.coalesce("la", "a").alias("u"),
+            F.coalesce("lb", "b").alias("v"),
+            F.col("la").isNull().alias("u_new"),
+            F.col("lb").isNull().alias("v_new"),
+        ),
+        "incremental_components delta edges",
     )
-    return connected_components(
-        star.unionByName(delta_edges.select(src, dst)),
-        src=src,
-        dst=dst,
-        max_iterations=max_iterations,
+    parent: dict = {}  # non-root label -> parent; roots are absent
+
+    def find(x):
+        path = []
+        while x in parent:
+            path.append(x)
+            x = parent[x]
+        for p in path:
+            parent[p] = x
+        return x
+
+    labels, new = set(), set()
+    for u, v, u_new, v_new in zip(*edges.to_pydict().values()):
+        (new if u_new else labels).add(u)
+        (new if v_new else labels).add(v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    remap = {x: r for x in labels if (r := find(x)) != x}
+    fresh = sorted(new)
+    ty = edges.schema.field("u").type
+    remap_df = spark.createDataFrame(
+        pa.table({
+            "old": pa.array(list(remap), ty),
+            "root": pa.array(list(remap.values()), ty),
+        })
+    )
+    new_df = spark.createDataFrame(
+        pa.table({
+            "node": pa.array(fresh, ty),
+            "component": pa.array([find(x) for x in fresh], ty),
+        })
+    )
+    return (
+        lab.join(F.broadcast(remap_df), lab.component == remap_df.old, "left")
+        .select("node", F.coalesce("root", "component").alias("component"))
+        .unionByName(new_df)
     )
 
 

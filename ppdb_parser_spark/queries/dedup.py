@@ -388,9 +388,9 @@ def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental connected components (the delta contract on the ITERATIVE
 # tier): base components are computed once over the base corpus's edges,
 # persisted through the S5 sink, and each ingest batch merges only its
-# delta edges via star-edge contraction — the expensive base near-dup
-# join never re-runs, and propagation starts from an already-flat forest
-# so rounds track the delta's merge depth, not the base diameter. Edges
+# delta edges via label contraction resolved on the driver — the
+# expensive base near-dup join never re-runs, and no propagation rounds
+# run: each base component is one vertex (its label). Edges
 # are the UNCAPPED 0.5-Jaccard pairs (the dedup_jaccard_incremental
 # tier): a df cap would couple base and delta (a shingle's df can cross
 # the cap when the delta lands, silently changing base-side edges), so
@@ -800,7 +800,11 @@ def pipeline_incremental_ingest_report(
 ) -> DataFrame:
     import pyarrow.parquet as pq
 
-    from ..operators.graph import connected_components, incremental_components
+    from ..operators.graph import (
+        collect_delta,
+        connected_components,
+        incremental_components,
+    )
     from .similarity import (
         _index_dir,
         _load_persisted_index,
@@ -826,9 +830,13 @@ def pipeline_incremental_ingest_report(
     )
 
     # leg 2 — near-dup pairs from the SAME persisted packed base the
-    # indexed jaccard query maintains (artifact shared, not rebuilt);
-    # lazy cut: the pair relation feeds the count AND the CC merge
-    n_base = base.count()  # one staleness-guard count for BOTH artifacts
+    # indexed jaccard query maintains (artifact shared, not rebuilt).
+    # Under the delta_min_id contract the pairs are delta-sized: one
+    # capped collect turns them into an Arrow literal (a JVM-side
+    # LocalRelation) that feeds both the near count and the CC merge.
+    # The dense-id contract behind c0 also gives the base row count for
+    # both artifacts' staleness guards.
+    n_base = c0
     packed = _load_persisted_index(
         spark,
         base,
@@ -839,13 +847,14 @@ def pipeline_incremental_ingest_report(
         fingerprint=fp,
         n_corpus=n_base,
     )
-    pairs = (
-        DD.jaccard_pairs_from_index(
-            packed, delta, delta_min_id=c0, threshold=0.5, n=2,
-            min_partitions=_par(spark),
+    pairs = spark.createDataFrame(
+        collect_delta(
+            DD.jaccard_pairs_from_index(
+                packed, delta, delta_min_id=c0, threshold=0.5, n=2,
+                min_partitions=_par(spark),
+            ).select("id_a", "id_b"),
+            "pipeline_incremental_ingest_report delta pairs",
         )
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
     )
     near = pairs.groupBy(F.col("id_b").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_prior_near")

@@ -10,6 +10,7 @@ rounding grid both sides share.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -345,6 +346,32 @@ def _read_meta(meta_path: str):
     return rows[0] if rows else None
 
 
+def _footer_schema(path: str):
+    """The Spark schema of a written artifact, read DRIVER-SIDE from the
+    ``org.apache.spark.sql.parquet.row.metadata`` key Spark stamps in
+    every part file's footer (pyarrow, like :func:`_read_meta`). Handing
+    it to ``spark.read.schema`` skips the schema-inference job a plain
+    ``spark.read.parquet`` runs on every load. ``None`` when there is no
+    part file or the first one lacks the key (unreadable, or rewritten
+    by another writer)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    parts = sorted(
+        f for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if not parts:
+        return None
+    try:
+        meta = pq.read_schema(os.path.join(path, parts[0])).metadata or {}
+    except (OSError, pa.ArrowInvalid):
+        return None
+    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
 def _load_persisted_index(
     spark, corpus, path, build, force=False, fingerprint="", n_corpus=None
 ):
@@ -352,18 +379,21 @@ def _load_persisted_index(
     STALE. Freshness contract: the corpus row count AND a source-file
     content fingerprint (``_source_fingerprint`` — sizes + mtimes, no
     data scan) are stamped next to the artifact at build time
-    (``<path>_meta``) and re-checked on every load. The count over
-    parquet is answered from footer metadata, so the guard costs one
-    metadata job at any corpus scale; the fingerprint catches a
-    regenerated dataset whose row count happens to match (ADVICE r13).
-    An index built against an older corpus snapshot can then never
-    silently serve wrong centroids — it rebuilds. (Both guards are
-    control-plane work at plan-BUILD time, deliberately outside the
-    returned DataFrame's lineage; the data path stays zero-driver-side.)
+    (``<path>_meta``) and re-checked on every load; the fingerprint
+    catches a regenerated dataset whose row count happens to match
+    (ADVICE r13). An index built against an older corpus snapshot can
+    then never silently serve wrong centroids — it rebuilds. (Both
+    guards are control-plane work at plan-BUILD time, deliberately
+    outside the returned DataFrame's lineage; the data path stays
+    zero-driver-side.)
 
-    ``n_corpus``: callers loading SEVERAL artifacts over the SAME corpus
-    (e.g. MinHash bands + sets) pass the count once instead of paying
-    the guard's count job per artifact (round 16).
+    ``n_corpus``: the corpus row count when the caller already knows it
+    (from parquet footers, or once for SEVERAL artifacts over the same
+    corpus); otherwise ``corpus.count()`` runs, which measured 2 Spark
+    jobs. With it passed, a fresh load runs no Spark job: the stamp and
+    the artifact's schema (:func:`_footer_schema`) are both read from
+    parquet footers on the driver. An artifact whose footer lacks the
+    Spark schema counts as stale and is rebuilt.
     """
     meta_path = path + "_meta"
     if n_corpus is None:
@@ -379,6 +409,7 @@ def _load_persisted_index(
             # older stamps lack the column; treat them as stale once
             or ("fingerprint" not in meta)
             or meta["fingerprint"] != fingerprint
+            or _footer_schema(path) is None
         )
     if stale:
         build().write.mode("overwrite").parquet(path)
@@ -387,7 +418,7 @@ def _load_persisted_index(
             F.lit(n_corpus).cast("long").alias("n_corpus"),
             F.lit(fingerprint).alias("fingerprint"),
         ).coalesce(1).write.mode("overwrite").parquet(meta_path)
-    return spark.read.parquet(path)
+    return spark.read.schema(_footer_schema(path)).parquet(path)
 
 
 def _load_appended_index(

@@ -138,3 +138,71 @@ def test_source_fingerprint_tracks_mtime(tmp_path):
     src.write_bytes(b"y" * 64)  # same size, new content/mtime
     fp2 = _source_fingerprint(str(tmp_path))
     assert fp1 != fp2
+
+
+def test_persisted_index_fresh_load_runs_no_job(spark, tmp_path):
+    """With the corpus count passed in, a fresh load is driver-side
+    footer reads only: the meta stamp and the artifact's Spark schema
+    (handed to ``spark.read.schema``, so no inference job runs)."""
+    import uuid
+
+    from ppdb_parser_spark.queries.similarity import _load_persisted_index
+
+    e = load_table(spark, SF, "embeddings")
+    path = os.path.join(str(tmp_path), "fresh_idx")
+    builds = []
+
+    def build():
+        builds.append(1)
+        return ivf_build_centroids(e, n_cells=8)
+
+    _load_persisted_index(spark, e, path, build, fingerprint="fp", n_corpus=7)
+    sc = spark.sparkContext
+    group = f"fresh-load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "fresh persisted-index load")
+    try:
+        loaded = _load_persisted_index(
+            spark, e, path, build, fingerprint="fp", n_corpus=7
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(builds) == 1
+    assert jobs == [], f"fresh load ran Spark jobs {jobs}"
+    assert loaded.schema == spark.read.parquet(path).schema
+    assert _rows(loaded) == _rows(spark.read.parquet(path))
+
+
+def test_persisted_index_without_spark_footer_schema_rebuilds(spark, tmp_path):
+    """An artifact whose parquet was rewritten by another writer (pyarrow
+    here), so its footer lacks Spark's row metadata, is stale: the load
+    rebuilds it instead of reading it some other way."""
+    import pyarrow.parquet as pq
+
+    from ppdb_parser_spark.queries.similarity import (
+        _footer_schema,
+        _load_persisted_index,
+    )
+
+    e = load_table(spark, SF, "embeddings")
+    path = os.path.join(str(tmp_path), "foreign_idx")
+    builds = []
+
+    def build():
+        builds.append(1)
+        return ivf_build_centroids(e, n_cells=8)
+
+    _load_persisted_index(spark, e, path, build, fingerprint="fp", n_corpus=7)
+    assert _footer_schema(path) is not None
+    table = pq.read_table(path).replace_schema_metadata(None)
+    for fn in os.listdir(path):
+        if fn.endswith(".parquet") or fn.endswith(".crc"):
+            os.remove(os.path.join(path, fn))
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    assert _footer_schema(path) is None
+    loaded = _load_persisted_index(
+        spark, e, path, build, fingerprint="fp", n_corpus=7
+    )
+    assert len(builds) == 2
+    assert _footer_schema(path) is not None
+    assert loaded.count() == 8

@@ -3353,38 +3353,83 @@ def test_containment_index_path_equals_delta_self_join(spark):
     assert want, "delta fixture must be non-degenerate"
 
 
+def _arrow_literal(spark, df):
+    """``df`` as a JVM-side Arrow literal: a ``LocalRelation``, so any
+    ``LogicalRDD`` left in a plan built on it came from the operator."""
+    return spark.createDataFrame(df.toArrow())
+
+
 def test_incremental_components_equals_from_scratch(spark):
-    """Star-edge contraction (incremental_components): merging delta
-    edges into a persisted base labeling must reach the identical
-    min-label fixpoint as running CC from scratch over base ∪ delta
-    edges — including a delta edge that MERGES two existing base
-    components and a brand-new node chained through the delta."""
+    """Label contraction (incremental_components): merging delta edges
+    into a persisted base labeling must reach the identical min-label
+    fixpoint, node set and id dtype as running CC from scratch over
+    base ∪ delta edges, and its literal parts must be JVM-side
+    ``LocalRelation``s (never a Python-RDD ``LogicalRDD``), empty delta
+    included."""
     from ppdb_parser_spark.operators.graph import (
         connected_components,
         incremental_components,
     )
 
-    base_edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "id_a int, id_b int"
+    big = 1 << 40  # ids past int range for the bigint case
+    # (name, id type, base edges, delta edges, components after merge)
+    cases = [
+        # merges {1,2,3} with {5,6} via 3-5, adds new node 9 via 6-9
+        ("merge+new", "int", [(1, 2), (2, 3), (5, 6)], [(3, 5), (6, 9)], 1),
+        ("empty delta", "int", [(1, 2), (2, 3), (5, 6)], [], 2),
+        ("inside one component", "int", [(1, 2), (2, 3), (5, 6)], [(3, 1)], 2),
+        ("delta-only component", "int", [(1, 2), (5, 6)], [(9, 8), (8, 7)], 3),
+        # new node 10 chains three base components into one rooted at 1
+        (
+            "three-way chain", "int",
+            [(4, 5), (1, 2), (7, 8)], [(5, 10), (10, 2), (8, 10)], 1,
+        ),
+        (
+            "merge+new", "bigint",
+            [(big + 1, big + 2), (big + 2, big + 3), (big + 5, big + 6)],
+            [(big + 3, big + 5), (big + 6, big + 9)], 1,
+        ),
+    ]
+    for name, ty, base, delta, n_components in cases:
+        schema = f"id_a {ty}, id_b {ty}"
+        base_edges = spark.createDataFrame(base, schema)
+        delta_edges = spark.createDataFrame(delta, schema)
+        want_df = connected_components(base_edges.unionByName(delta_edges))
+        base_labels = _arrow_literal(spark, connected_components(base_edges))
+        got_df = incremental_components(base_labels, delta_edges)
+        want = sorted(tuple(r) for r in want_df.collect())
+        got = sorted(tuple(r) for r in got_df.collect())
+        assert got == want, name
+        assert len({c for _, c in got}) == n_components, name
+        assert got_df.schema == want_df.schema, name
+        plan = got_df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, (
+            f"{name}\n{plan}"
+        )
+
+
+def test_delta_collects_fail_loudly_above_cap(spark, sf_dir, monkeypatch):
+    """Both driver collects of a delta-sized relation (the contracted
+    edges in incremental_components, the ingest report's delta pairs)
+    read at most ``DELTA_ROWS_CAP + 1`` rows and raise a ValueError
+    naming the cap and the delta_min_id contract, instead of a driver
+    OOM deep inside the collect."""
+    from ppdb_parser_spark.operators import graph
+
+    monkeypatch.setattr(graph, "DELTA_ROWS_CAP", 1)
+    base_labels = spark.createDataFrame(
+        [(1, 1), (2, 1)], "node long, component long"
     )
-    # delta: merges {1,2,3} with {5,6} via 3-5, adds new node 9 via 6-9
     delta_edges = spark.createDataFrame(
-        [(3, 5), (6, 9)], "id_a int, id_b int"
+        [(2, 3), (3, 4)], "id_a long, id_b long"
     )
-    want = {
-        (r.node, r.component)
-        for r in connected_components(
-            base_edges.unionByName(delta_edges)
-        ).collect()
-    }
-    base_labels = connected_components(base_edges)
-    got = {
-        (r.node, r.component)
-        for r in incremental_components(base_labels, delta_edges).collect()
-    }
-    assert got == want
-    # everything merged into one component rooted at 1
-    assert {c for _, c in got} == {1}
+    with pytest.raises(ValueError, match=r"more than 1 rows.*delta_min_id"):
+        graph.incremental_components(base_labels, delta_edges)
+    with pytest.raises(
+        ValueError,
+        match=r"ingest_report delta pairs: more than 1 rows.*delta_min_id",
+    ):
+        REGISTRY["pipeline_incremental_ingest_report"].fn(spark, sf_dir)
 
 
 def test_semantic_index_path_equals_delta_self_contained(spark):

@@ -484,3 +484,25 @@ def test_dictionary_sides_pin_aqe_exempt_repartition(spark, sf_dir):
     assert "REPARTITION_BY_NUM" in bloom_plan, (
         "bloom vocabulary lost its AQE-exempt repartition:\n" + bloom_plan
     )
+
+
+def test_ingest_report_job_count_pinned(spark, sf_dir):
+    """The incremental ingest report's fixed per-call floor, pinned in
+    Spark jobs (build + count, after a warm-up that builds its persisted
+    indexes). The delta pairs and the contracted CC edges are resolved on
+    the driver into Arrow literals, so no per-round checkpoint/count loop
+    runs: 18 jobs here, against 35 with the min-label loop over star
+    edges."""
+    import uuid
+
+    fn = REGISTRY["pipeline_incremental_ingest_report"].fn
+    fn(spark, sf_dir).count()
+    sc = spark.sparkContext
+    group = f"ingest-report-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ingest report job-count pin")
+    try:
+        fn(spark, sf_dir).count()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 18, f"ingest report ran {len(jobs)} Spark jobs"

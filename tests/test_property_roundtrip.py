@@ -142,6 +142,41 @@ def test_star_components_equal_min_label_random_graphs(spark, edges):
     assert s == p
 
 
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(edges=_edges, in_base=st.lists(st.booleans(), min_size=60, max_size=60))
+def test_incremental_components_equal_from_scratch_random_splits(
+    spark, edges, in_base
+):
+    """Merging a random delta into the labeling of a random base must
+    give exactly CC over base ∪ delta — label contraction on random
+    splits of random edge sets (self loops, duplicates, reversed pairs,
+    empty base or empty delta)."""
+    from ppdb_parser_spark.operators.graph import (
+        connected_components,
+        incremental_components,
+    )
+
+    schema = "id_a long, id_b long"
+    base = [e for e, b in zip(edges, in_base) if b]
+    delta = [e for e, b in zip(edges, in_base) if not b]
+    want = connected_components(
+        spark.createDataFrame(edges, schema), max_iterations=50
+    )
+    base_labels = connected_components(
+        spark.createDataFrame(base, schema), max_iterations=50
+    )
+    got = incremental_components(
+        base_labels, spark.createDataFrame(delta, schema)
+    )
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in want.collect()
+    )
+
+
 @st.composite
 def _vectors(draw):
     n = draw(st.integers(6, 20))

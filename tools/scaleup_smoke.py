@@ -1439,7 +1439,7 @@ def main() -> None:
         # Incremental connected-components growth law (round 14): the
         # dedup-maintenance story is a persisted labeling + per-batch
         # delta merges, so the honest comparison is incremental_components
-        # (star-contracted base + delta edges) vs BOTH full-recompute
+        # (label-contracted base + delta edges) vs BOTH full-recompute
         # strategies — min-label (O(diameter) rounds) and large/small-star
         # (O(log n) rounds) — over the same edge set. Fixture: chains of
         # 32 nodes (diameter 31 stresses min-label exactly the way long
